@@ -10,10 +10,15 @@ scan from `last_log − 5 s`, dedupe on push, recompute stats
   time — the north_rule's "per-partition lineage + metrics". It is genuinely
   append-only (O_APPEND + fsync per line), so an N-partition backfill is O(N)
   file I/O;
-- a CLOSED partition is committed atomically AFTER its routed write succeeds;
+- one cycle is ONE routed write: every uncommitted day goes through a single
+  parse+enrich and a single ``partitionBy("day", "route_key")`` write with
+  dynamic partition overwrite (``_ingest``, shared by ``run_incremental``
+  and ``backfill``), so a cycle's Spark job count does not grow with the
+  number of uncommitted days;
+- a CLOSED partition is committed atomically AFTER the routed write succeeds;
   resume skips committed partitions (no reprocessing), reprocesses anything
-  else — idempotent because each partition write is a full overwrite of that
-  partition's directories and ingest dedupes on (conv_id, turn_idx) (T4);
+  else — idempotent because uncommitted day dirs are deleted and rewritten
+  whole and ingest dedupes on (conv_id, turn_idx) (T4);
 - the watermark-overlap semantics (T2: rescan from last_log − 5 s): the most
   recent day present in the input is treated as STILL OPEN — it is written
   every cycle but never committed, so rows that arrive for it later are picked
@@ -24,8 +29,8 @@ scan from `last_log − 5 s`, dedupe on push, recompute stats
   watermark overlap);
 - dedupe on (conv_id, turn_idx) runs ONCE over the whole uncommitted slice
   (not per-day), so duplicate keys whose timestamps straddle an uncommitted
-  day boundary cannot double-count; the slice is persisted so the dedupe
-  window is computed once, not once per day.
+  day boundary cannot double-count; the write is the slice's only reader,
+  so nothing is persisted.
 
 At cluster scale the same protocol runs with Iceberg: the routed write becomes
 an atomic REPLACE of the day partition and _lineage a table; the driver loop
@@ -37,7 +42,6 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -205,23 +209,30 @@ def _record_skipped_committed(
             )
 
 
-def run_incremental(
+def _ingest(
     spark: SparkSession,
     transcripts: DataFrame,
     tool_dim: DataFrame,
     out_dir: str,
     ck_dir: str,
+    *,
+    mode: str,
+    commit_open_day: bool,
+    skip_idle_open_day: bool,
     fail_after: int | None = None,
-    on_partition: Callable[[str], None] | None = None,
-    commit_open_day: bool = False,
 ) -> list[str]:
-    """Process all uncommitted day partitions; returns the days processed.
+    """The ingest body behind both entry points: ONE partitioned write covers
+    every uncommitted day (a 365-day backlog is one write, not 365), then
+    lineage commits each closed day from footer-metadata counts; the open
+    (max) day is written but left uncommitted. Dynamic partition overwrite
+    leaves committed days on disk untouched, so a crash before or inside the
+    commit loop simply reruns. fail_after=k raises before the (k+1)-th commit
+    (test hook simulating a crash after the write)."""
+    import shutil
 
-    The max day in the input is treated as still open (written, not
-    committed) unless commit_open_day=True. fail_after=k aborts after k
-    commits (test hook simulating a mid-run crash); resume = call again with
-    the same ck_dir.
-    """
+    from ictspark.io import dedupe_transcripts
+    from ictspark.snapshots import SnapshotLog, snapshot_day_write
+
     lin = Lineage(ck_dir)
     lin_entries = lin.entries()  # parsed once; committed + skip-dedupe share it
     done = committed_partitions(lin_entries)
@@ -245,7 +256,7 @@ def run_incremental(
     # uncommitted day exists, the T4 dedupe slice must include the open day's
     # rows (a duplicate key straddling the two days would otherwise escape
     # the newest-wins window and double-count — code-review r03).
-    if todo == [open_day]:
+    if skip_idle_open_day and todo == [open_day]:
         last = _last_open_event(lin_entries, open_day)
         if (
             last is not None
@@ -253,115 +264,31 @@ def run_incremental(
             and last.get("input_sig") == day_sigs[open_day]
         ):
             todo = []
-    _record_skipped_committed(lin, day_counts, day_sigs, done, "incremental", entries=lin_entries)
+    _record_skipped_committed(lin, day_counts, day_sigs, done, mode, entries=lin_entries)
     if not todo:
         return []
-    # T4: ONE dedupe over the whole uncommitted slice — duplicate
-    # (conv_id, turn_idx) keys cannot double-count across uncommitted day
-    # boundaries, and the window shuffle runs once, not once per day.
-    from ictspark.io import dedupe_transcripts
-    from ictspark.snapshots import SnapshotLog, snapshot_day_write
-
-    slog = SnapshotLog(ck_dir)
-    batch = dedupe_transcripts(t.where(F.col("_day").isin(todo))).persist()
-    processed: list[str] = []
-    n_commits = 0
-    try:
-        for day in todo:
-            if fail_after is not None and n_commits >= fail_after:
-                raise RuntimeError(f"injected failure before partition {day}")
-            t0 = time.time()
-            day_rows = batch.where(F.col("_day") == day).drop("_day")
-            # NOTE: no attempt ranking here — attempt is a conv-scoped window,
-            # and a conv can span partition boundaries; ranking inside one day
-            # would be wrong. The routed store holds per-row parse+enrich
-            # output only; windows/aggregates run at report time over the full
-            # store (the reference likewise recomputes all stats after each
-            # ingest batch, main.rs:691-694).
-            steps = parse.parse_steps(day_rows)
-            routed = enrich.enrich_steps(steps, tool_dim).repartition(F.col("route_key"))
-            path = _routed_day_path(out_dir, day)
-            routed.write.mode("overwrite").partitionBy("route_key").parquet(path)
-            # row count from the committed bytes (parquet footer metadata) —
-            # no second parse+enrich pass. Explicit schema: a day whose rows
-            # were ALL newer-day duplicates writes zero data files, and a
-            # schema-less read of an empty directory would throw and wedge
-            # resume on that day forever.
-            n = spark.read.schema(routed.schema).parquet(path).count()
-            # "mode" keeps lineage rows schema-homogeneous across entry points
-            # (createDataFrame over mixed-key dicts would fail in metrics)
-            # snapshot lineage (Iceberg commit analog): which files this
-            # write added — the open day's rewrite records as a REPLACE
-            snapshot_day_write(slog, out_dir, day)
-            metrics = {
-                "rows": int(n),
-                "duration_s": round(time.time() - t0, 3),
-                "mode": "incremental",
-                "input_rows": int(day_counts[day]),
-                "input_sig": day_sigs[day],
-            }
-            if day == open_day:
-                lin.mark_open(day, **metrics)
-            else:
-                lin.commit(day, **metrics)
-                n_commits += 1
-            processed.append(day)
-            if on_partition:
-                on_partition(day)
-    finally:
-        batch.unpersist()
-    return processed
-
-
-def backfill(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    tool_dim: DataFrame,
-    out_dir: str,
-    ck_dir: str,
-    commit_open_day: bool = False,
-) -> list[str]:
-    """Cold-start ingest: ONE partitioned write covers every uncommitted day
-    instead of one Spark job per day (a 365-day backlog is 1 job, not 365).
-
-    Dynamic partition overwrite replaces only the (day, route_key) partitions
-    present in the batch — committed days on disk are untouched, so the write
-    is idempotent and a crash before the commit loop simply reruns. Lineage
-    commits happen per day AFTER the write succeeds, from footer-metadata
-    counts; the open (max) day is written but left uncommitted exactly as in
-    run_incremental. The two entry points share layout and lineage, so a
-    backfill can be continued by run_incremental cycles and vice versa.
-
-    Uncommitted on-disk day dirs are DELETED before the write (ADVICE r02
-    medium): dynamic overwrite only replaces partitions present in the current
-    batch, so a day written open by an earlier cycle would otherwise keep
-    stale files when its rows are later deduped away to a newer day (or a
-    route_key vanishes) — and the stale dir would then be committed with stale
-    non-zero counts, double-counting against the rows' newer-day copies.
-    Todo days are uncommitted by definition, so their on-disk state is
-    disposable; committed days are never touched.
-    """
-    import shutil
-
-    lin = Lineage(ck_dir)
-    lin_entries = lin.entries()
-    done = committed_partitions(lin_entries)
-    t = transcripts.withColumn("_day", F.date_format(F.to_date("ts"), "yyyy-MM-dd"))
-    day_counts, day_sigs = _day_stats(t)
-    days = sorted(day_counts)
-    open_day = days[-1] if days and not commit_open_day else None
-    todo = [d for d in days if d not in done]
-    _record_skipped_committed(lin, day_counts, day_sigs, done, "backfill", entries=lin_entries)
-    if not todo:
-        return []
-    from ictspark.io import dedupe_transcripts
-
     t0 = time.time()
+    # uncommitted day dirs are DELETED before the write (ADVICE r02 medium):
+    # dynamic overwrite only replaces partitions present in the batch, so a
+    # day written open by an earlier cycle would otherwise keep stale files
+    # when its rows are later deduped away to a newer day (or a route_key
+    # vanishes) — and then commit stale non-zero counts, double-counting
+    # against the rows' newer-day copies. Todo days are uncommitted by
+    # definition, so their on-disk state is disposable.
     for day in todo:
         stale = _routed_day_path(out_dir, day)
         if os.path.isdir(stale):
             shutil.rmtree(stale)
+    # T4: ONE newest-wins dedupe over the whole uncommitted slice — duplicate
+    # (conv_id, turn_idx) keys cannot double-count across uncommitted day
+    # boundaries. Nothing is persisted: the write is the slice's only reader.
     batch = dedupe_transcripts(t.where(F.col("_day").isin(todo)))
+    # NOTE: no attempt ranking here — attempt is a conv-scoped window, and a
+    # conv can span partition boundaries; ranking inside one day would be
+    # wrong. The routed store holds per-row parse+enrich output only;
+    # windows/aggregates run at report time over the full store (the
+    # reference likewise recomputes all stats after each ingest batch,
+    # main.rs:691-694).
     steps = parse.parse_steps(batch.drop("_day"))
     routed = (
         enrich.enrich_steps(steps, tool_dim)
@@ -375,30 +302,37 @@ def backfill(
         .parquet(out_dir)
     )
     wall = round(time.time() - t0, 3)
-    # per-day row counts from the committed bytes (footer metadata only). A
-    # todo day whose rows were ALL newer-day duplicates writes no directory —
-    # skip the missing path and commit it with rows=0 (its rows live in the
-    # newer day), instead of failing the read forever.
+    # per-day row counts from the committed bytes (footer metadata only; the
+    # explicit schema spares a schema-inference job and keeps `day` a
+    # string). A todo day whose rows were ALL newer-day duplicates writes no
+    # directory — skip the missing path and commit it with rows=0 (its rows
+    # live in the newer day), instead of failing the read forever.
     written = [d for d in todo if os.path.isdir(_routed_day_path(out_dir, d))]
     counts: dict[str, int] = {}
     if written:
         counts = {
             r["day"]: r["n"]
-            for r in spark.read.option("basePath", out_dir)
+            for r in spark.read.schema(routed.schema)
+            .option("basePath", out_dir)
             .parquet(*[_routed_day_path(out_dir, d) for d in written])
-            .groupBy(F.col("day").cast("string").alias("day"))
+            .groupBy("day")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-    from ictspark.snapshots import SnapshotLog, snapshot_day_write
-
     slog = SnapshotLog(ck_dir)
+    n_commits = 0
     for day in todo:
+        if fail_after is not None and n_commits >= fail_after:
+            raise RuntimeError(f"injected failure before partition {day}")
+        # snapshot lineage (Iceberg commit analog): which files this write
+        # added — the open day's rewrite records as a REPLACE
         snapshot_day_write(slog, out_dir, day)
+        # "mode" keeps lineage rows schema-homogeneous across entry points
+        # (createDataFrame over mixed-key dicts would fail in metrics)
         metrics = {
             "rows": int(counts.get(day, 0)),
             "duration_s": wall,
-            "mode": "backfill",
+            "mode": mode,
             "input_rows": int(day_counts[day]),
             "input_sig": day_sigs[day],
         }
@@ -406,7 +340,53 @@ def backfill(
             lin.mark_open(day, **metrics)
         else:
             lin.commit(day, **metrics)
+            n_commits += 1
     return todo
+
+
+def run_incremental(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    tool_dim: DataFrame,
+    out_dir: str,
+    ck_dir: str,
+    fail_after: int | None = None,
+    commit_open_day: bool = False,
+) -> list[str]:
+    """One AutoUpdate poll cycle: process all uncommitted day partitions;
+    returns the days processed.
+
+    The max day in the input is treated as still open (written, not
+    committed) unless commit_open_day=True. An idle cycle — the open day is
+    the only uncommitted day and its input is content-identical to the last
+    write — does nothing and appends nothing. fail_after=k aborts before the
+    (k+1)-th commit (test hook simulating a mid-run crash); resume = call
+    again with the same ck_dir.
+    """
+    return _ingest(
+        spark, transcripts, tool_dim, out_dir, ck_dir, mode="incremental",
+        commit_open_day=commit_open_day, skip_idle_open_day=True, fail_after=fail_after,
+    )
+
+
+def backfill(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    tool_dim: DataFrame,
+    out_dir: str,
+    ck_dir: str,
+    commit_open_day: bool = False,
+) -> list[str]:
+    """Cold-start ingest: the same one-write body as run_incremental, minus
+    the idle open-day skip (a backfill always rewrites what it is given), with
+    its lineage rows labelled mode="backfill". The two entry points share
+    layout and lineage, so a backfill can be continued by run_incremental
+    cycles and vice versa.
+    """
+    return _ingest(
+        spark, transcripts, tool_dim, out_dir, ck_dir, mode="backfill",
+        commit_open_day=commit_open_day, skip_idle_open_day=False,
+    )
 
 
 def read_all_routed(spark: SparkSession, out_dir: str) -> DataFrame:

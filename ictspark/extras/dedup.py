@@ -467,8 +467,10 @@ def simhash(documents: DataFrame) -> DataFrame:
     cost center): the WHOLE signature is one ``mapInArrow`` map stage —
     per doc, the distinct token set (same lower/split-' '/drop-empties
     tokenization), two hashlib md5 digests per distinct token (memoized
-    per task: the vocabulary is corpus-bounded, so a reused worker hashes
-    each token once), and a vectorized NumPy nibble-parity majority vote.
+    per Arrow batch and reset between batches, so a long-lived worker's
+    memo stays bounded by one batch's vocabulary instead of growing with
+    every token it has ever seen), and a vectorized NumPy nibble-parity
+    majority vote.
     ZERO Exchanges where the former plan paid a vocab DISTINCT shuffle, a
     broadcast join and a 64-column aggregation (measured 1.9 s → 0.4 s
     warm / 6.0 s → 2.2 s cold at sf0.1/32); rows proved identical with
@@ -515,6 +517,7 @@ def simhash(documents: DataFrame) -> DataFrame:
             return val
 
         for batch in it:
+            cache.clear()
             texts = batch.column("text").to_pylist()
             keep: list[int] = []
             his: list[int] = []

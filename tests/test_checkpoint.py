@@ -298,3 +298,26 @@ def test_idle_skip_keeps_cross_day_dedupe(spark, smoke_sf_dir):
         new_day = (max_day - __import__("datetime").timedelta(days=30)).strftime("%Y-%m-%d")
         by_day = {e["partition"]: e for e in lin.entries() if e.get("status") == "committed"}
         assert by_day[new_day]["rows"] == 0  # the duplicate day committed empty
+
+
+def test_cycle_job_count_does_not_grow_with_days(spark, smoke_sf_dir):
+    """One ingest cycle is one routed write: the Spark jobs a run_incremental
+    cycle launches must not grow with the number of uncommitted days (a
+    per-day write loop adds write + count-back jobs for every day)."""
+    t = io.load_transcripts(spark, smoke_sf_dir)
+    tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
+    days = sorted(r["d"] for r in t.select(F.to_date("ts").alias("d")).distinct().collect())
+    assert len(days) > 2
+    sc = spark.sparkContext
+    jobs = {}
+    for label, inp in (("two", t.where(F.to_date("ts") <= F.lit(days[1]))), ("all", t)):
+        with tempfile.TemporaryDirectory() as d:
+            group = f"ck-jobs-{label}"
+            sc.setJobGroup(group, "run_incremental job count")
+            try:
+                processed = CK.run_incremental(spark, inp, tool_dim, f"{d}/out", f"{d}/ck")
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(processed) == (2 if label == "two" else len(days))
+            jobs[label] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs["all"] <= jobs["two"], jobs

@@ -751,6 +751,9 @@ def test_winnow_fingerprint_properties(spark):
         ],
         "doc_id int, text string",
     )
+    # the int32 doc_id keeps its type through the mapInArrow selection
+    sel_t = textstats.winnow_selected(docs).schema["doc_id"].dataType
+    assert sel_t == docs.schema["doc_id"].dataType
     wf = {r["doc_id"]: r for r in textstats.winnow_fingerprint(docs).collect()}
     n_shingles = {
         r["doc_id"]: r["n"]
